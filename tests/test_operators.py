@@ -168,33 +168,45 @@ def test_minhash_identical_docs_found(spark):
 
 
 def test_xxh64_np_matches_spark_every_short_length(spark):
-    """The NumPy XXH64 kernel behind the Arrow minhash path must be
-    bit-equal to Spark's xxhash64 for EVERY input length it can see
-    (0..31 bytes), including multi-byte UTF-8 — this is the contract that
-    lets the mapInArrow signature stage replace the JVM expression tree."""
+    """The NumPy XXH64 kernels must be bit-equal to Spark's xxhash64 for
+    EVERY input length they can see, including multi-byte UTF-8 — this is
+    the contract that lets the mapInArrow stages replace the JVM
+    expression tree. xxh64_short (the minhash shingle path) is pinned on
+    lengths 0..31; the general xxh64 (the simhash per-token path) on
+    lengths 0..100, i.e. the short init and 1-3 stripe accumulators."""
     import numpy as np
 
-    from ml_data_pipeline_spark.functions.xxh64_np import xxh64_short
+    from ml_data_pipeline_spark.functions.xxh64_np import xxh64, xxh64_short
 
     rng = np.random.default_rng(16)
-    samples: list[bytes] = []
-    for length in range(32):
-        for _ in range(4):
-            samples.append(bytes(rng.integers(0, 256, length, dtype=np.uint8)))
-    for s in ("", "héllo", "日本語テスト", "ünïcodé!", "a" * 31, "é" * 10):
-        samples.append(s.encode("utf-8"))
-    maxlen = max(1, max(len(b) for b in samples))
-    data = np.zeros((len(samples), maxlen), dtype=np.uint8)
-    lens = np.zeros(len(samples), dtype=np.int64)
-    for i, b in enumerate(samples):
-        data[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-        lens[i] = len(b)
-    ours = xxh64_short(data, lens)
+
+    def samples_upto(max_len: int, texts: tuple[str, ...]) -> list[bytes]:
+        out = [
+            bytes(rng.integers(0, 256, length, dtype=np.uint8))
+            for length in range(max_len + 1)
+            for _ in range(4)
+        ]
+        return out + [t.encode("utf-8") for t in texts]
+
+    def pack(samples: list[bytes]):
+        maxlen = max(1, max(len(b) for b in samples))
+        data = np.zeros((len(samples), maxlen), dtype=np.uint8)
+        lens = np.zeros(len(samples), dtype=np.int64)
+        for i, b in enumerate(samples):
+            data[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
+            lens[i] = len(b)
+        return data, lens
+
+    short = samples_upto(31, ("", "héllo", "日本語テスト", "ünïcodé!", "a" * 31, "é" * 10))
+    general = samples_upto(100, ("é" * 16, "日本語" * 11, "https://example.org/" + "x" * 40))
+    ours = [int(h) for h in xxh64_short(*pack(short))]
+    ours += [int(h) for h in xxh64(*pack(general))]
+    samples = short + general
     df = spark.createDataFrame(
         [(i, bytearray(b)) for i, b in enumerate(samples)], "i int, b binary"
     )
     theirs = {r["i"]: r["h"] for r in df.select("i", F.xxhash64("b").alias("h")).collect()}
-    assert all(int(ours[i]) == theirs[i] for i in range(len(samples)))
+    assert [theirs[i] for i in range(len(samples))] == ours
 
 
 def test_minhash_arrow_path_equals_jvm_expressions(spark):
@@ -237,7 +249,8 @@ def test_simhash_per_tok_arrow_equals_jvm(spark):
     produce the exact (id, token-hash, count) multiset of the JVM shape
     explode(filter(split(lower(text), WS)))) → groupBy(id, xxhash64(t)) —
     including NULL docs (dropped), zero-token docs (dropped), \\x0b
-    splitting, unicode tokens, and repeated tokens (counts fold)."""
+    splitting, unicode tokens, repeated tokens (counts fold) and tokens
+    long enough for xxh64's stripe path."""
     from ml_data_pipeline_spark.constants import WS_PLUS
 
     docs = spark.createDataFrame(
@@ -250,6 +263,8 @@ def test_simhash_per_tok_arrow_equals_jvm(spark):
             (6, "  lead trail  "),
             (7, "TAB\tand\x0bvtab\nnl"),
             (8, ("tok " * 200).strip()),
+            # a 66-byte token: reaches xxh64's stripe accumulators (>= 32)
+            (9, "see https://example.org/archive/2024/long-url-like-token?id=0123456789 ok"),
         ],
         "doc_id long, text string",
     )

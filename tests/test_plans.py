@@ -278,16 +278,16 @@ def test_r8_sink_ml_gates_registered():
 
 
 def test_r16_gates_registered_and_windowed():
-    """The first-50 driver window is exactly _R16_PRIORITY (the 13
+    """The first-50 driver window is exactly DRIVER_WINDOW (the 13
     r16-modified gates first — the Arrow MinHash/simhash kernels, the
     staged tokenize projections, the thread-pool CV overlap, the Arrow
     exact-Lloyd assign — then strictly oldest-driver-row-first from the
     CORRECTNESS_r01-r15 union); every windowed gate is oracle-registered."""
     from ml_data_pipeline_spark.oracles import ALL_ORACLES
-    from ml_data_pipeline_spark.queries import _R16_PRIORITY
+    from ml_data_pipeline_spark.queries import DRIVER_WINDOW
 
     window = list(Q.ALL_QUERIES)[:50]
-    assert window == _R16_PRIORITY
+    assert window == DRIVER_WINDOW
     for g in (
         "dd_minhash_pairs",
         "dd_simhash_pairs",

@@ -373,6 +373,31 @@ def test_r12_build_ivf_index_exact_means_and_empty_clusters(spark):
     assert cents2[1] == [250.0, -125.0]  # empty cluster kept its init centroid
 
 
+def test_ivf_assign_kernel_sliced_batch_bounds_last_row():
+    """mapInArrow may hand the exact-Lloyd assign kernel a SLICED batch,
+    whose __qv child values run past offsets[-1]. The element-validity
+    count of the last row must stop at offsets[-1]: the valid elements and
+    the NULL element behind the slice belong to no row in the batch, so
+    both rows here are complete and get a cluster, not NULL."""
+    import pyarrow as pa
+
+    qv = pa.array([[1, 2], [3, 4], [5, 6], [7, None]], type=pa.list_(pa.int64()))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([0, 1, 2, 3], type=pa.int64()), qv], ["vec_id", "__qv"]
+    ).slice(0, 2)
+    assert batch.column(1).values.null_count == 1  # the slice keeps the tail
+    cents = [[1.0, 2.0], [100.0, 100.0]]
+
+    (out,) = SS._assign_kernel(cents, with_stats=False)([batch])
+    assert out.column(0).to_pylist() == [0, 1]
+    assert out.column(2).to_pylist() == [0, 0]
+
+    (stats,) = SS._assign_kernel(cents, with_stats=True)([batch.select(["__qv"])])
+    assert stats.to_pydict() == {
+        "ivf_cluster": [0, 0], "__i": [0, 1], "__sx": [4, 6], "__n": [2, 2],
+    }
+
+
 def test_r13_ivf_exact_twin_recall_floor(spark):
     """ADVICE r12: ss_ivf_topk's graduation swapped the gate's recall@10
     >= 0.3 floor for hash parity — but the oracle replays the SAME
